@@ -84,7 +84,7 @@ def asof_join(
     )
     l2 = left.withColumn("__ats", F.col(left_ts)).withColumn("__r", F.lit(0))
     u = l2.unionByName(r2, allowMissingColumns=True)
-    return _asof_select(
+    return asof_select_prepared(
         u,
         keys,
         list(left.columns),
@@ -97,7 +97,7 @@ def asof_join(
     )
 
 
-def _asof_select(
+def asof_select_prepared(
     u: DataFrame,
     keys: list[str],
     left_columns: list[str],
@@ -110,16 +110,29 @@ def _asof_select(
 ) -> DataFrame:
     """The asof window + match + projection over a PREPARED union frame.
 
-    ``u`` holds the left columns plus ``__ats`` (the event time of either
-    side), ``__pay`` (struct of the right output columns, NULL on left
-    rows) and ``__r`` (1 = right row). Split out of :func:`asof_join` so
-    a caller whose two sides are filtered slices of the SAME source can
-    build ``u`` from ONE scan (a union of two filtered scans of one
-    parquet plans as two full scans — scans have no reuse mechanism) and
-    still run the exact asof semantics from this single implementation.
+    The union-frame contract: ``u`` holds the left columns plus ``__ats``
+    (the event time of either side), ``__pay`` (struct of the right output
+    columns, NULL on left rows) and ``__r`` (1 = right row, 0 = left row).
     Right rows with a NULL key or NULL ``__ats`` must already be dropped
     (asof_join does this pre-union; single-source callers filter them in
-    place)."""
+    place). ``out_cols`` name the ``__pay`` fields projected onto the
+    output. ``right_ts_out`` names the right event time inside ``__pay``;
+    it is read only for ``tolerance_seconds``, so the payload may omit it
+    when no tolerance is set, and a ValueError is raised if a tolerance is
+    set without it.
+
+    Split out of :func:`asof_join` so a caller whose two sides are
+    filtered slices of the SAME source can build ``u`` from ONE scan (a
+    union of two filtered scans of one parquet plans as two full scans —
+    scans have no reuse mechanism) and still run the exact asof semantics
+    from this single implementation."""
+    if tolerance_seconds is not None:
+        pay_fields = u.schema["__pay"].dataType.fieldNames()
+        if right_ts_out not in pay_fields:
+            raise ValueError(
+                f"asof_select_prepared: tolerance_seconds needs right_ts_out "
+                f"{right_ts_out!r} in the __pay struct (has {pay_fields})"
+            )
     ts_order = F.col("__ats").asc() if direction == "backward" else F.col("__ats").desc()
     # at equal __ats the right row must precede the left row so the window
     # sees it (inclusive match) — __r desc does that for both directions

@@ -63,6 +63,13 @@ class Filter:
     def apply_plan(self, df: DataFrame, box: "FilterBox") -> DataFrame:  # pragma: no cover
         raise NotImplementedError
 
+    def reads_input_twice(self, box: "FilterBox") -> bool:
+        """True when this filter's plan forks its input into two branches
+        (a metric stream beside the passthrough, a guarded hit/miss split),
+        so a batch run persists the input once instead of computing the
+        upstream chain per branch (Chain.apply)."""
+        return False
+
 
 class FilterBox:
     def __init__(
@@ -317,7 +324,15 @@ class Chain:
     def __init__(self, boxes: list[FilterBox]):
         self.boxes = boxes
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, held: list[DataFrame] | None = None) -> DataFrame:
+        """The chain over ``df``. Without ``held`` the result is a purely
+        lazy plan. With it, the batch input of every box whose filter reads
+        its input twice is persisted and appended to ``held``; the caller
+        unpersists those frames once its writes are done. Streaming frames
+        are never persisted."""
         for box in self.boxes:
+            if held is not None and not df.isStreaming and box.filter.reads_input_twice(box):
+                df = df.persist()
+                held.append(df)
             df = box.apply(df)
         return df

@@ -107,6 +107,10 @@ class LinkMetric(Filter):
             *[F.col(c) for c in out.columns if c not in ("window", *gf)],
         )
 
+    def reads_input_twice(self, box: FilterBox) -> bool:
+        # the metric aggregation and the passthrough both read the input
+        return not self.drop_original_event
+
     def apply_plan(self, df: DataFrame, box: FilterBox) -> DataFrame:
         from gohangout_spark.expr.conditions import compile_conditions
 

@@ -136,8 +136,10 @@ class Pipeline:
         )
 
     # ---------------------------------------------------------------- batch
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.chain.apply(df)
+    def transform(self, df: DataFrame, held: list[DataFrame] | None = None) -> DataFrame:
+        """The compiled chain over ``df``: a lazy plan, unless ``held`` is
+        given (see Chain.apply)."""
+        return self.chain.apply(df, held)
 
     def _sink_df(self, df: DataFrame, sink) -> DataFrame:
         # per-output if condition (topology/output.go:41-49)
@@ -165,10 +167,42 @@ class Pipeline:
         return frames
 
     def run_batch(self, spark: SparkSession) -> None:
+        """Run the chain over every input once and write it to every sink.
+
+        Single-pass like topology/output.go:54-64: a frame the batch plan
+        reads more than once is persisted once and released when the run
+        ends. That is the input of a box whose filter reads its input twice
+        (LinkMetric/LinkStatsMetric keeping the original events, Dedup and
+        the guarded curation ops under an ``if``), and the chain output
+        when more than one sink reads it."""
         for raw in self._input_frames(spark, streaming=False):
-            df = self.transform(raw)
+            self._fan_out(raw)
+
+    def _fan_out(
+        self, df: DataFrame, epoch_id: int | None = None, chain: bool = True
+    ) -> None:
+        """Write ``df`` to every sink, computing it once: the one fan-out of
+        batch runs and of both foreachBatch paths of a stream. ``chain``
+        applies the filter chain first (False when ``df`` already carries
+        it, the in-plan streaming path); ``epoch_id`` None writes batch
+        sinks, otherwise micro-batch sinks. Every frame persisted on the
+        way is unpersisted when the writes end, also when a sink raises."""
+        held: list[DataFrame] = []
+        try:
+            if chain:
+                df = self.transform(df, held)
+            if len(self.sinks) > 1:
+                held.append(df.persist())
             for sink in self.sinks:
-                sink.write_batch(self._sink_df(df, sink))
+                out = self._sink_df(df, sink)
+                if epoch_id is None:
+                    sink.write_batch(out)
+                else:
+                    sink.write_micro_batch(out, epoch_id)
+        finally:
+            # dependents first, so no unpersist leaves a cached child to recompile
+            for frame in reversed(held):
+                frame.unpersist()
 
     # ------------------------------------------------------------ streaming
     def run_streaming(
@@ -210,44 +244,23 @@ class Pipeline:
                     "micro-batch, which would reset windowed-metric state. "
                     "Split into two pipelines, or drop refresh_interval."
                 )
+
+        # Translate refresh_interval (filter/translate.go:108-116): a dict
+        # baked into a started streaming plan can never change, so the CHAIN
+        # is applied inside foreachBatch — each micro-batch recompiles
+        # against the (possibly reloaded) dictionary. Valid because
+        # refreshable chains are stateless per-row transforms; windowed
+        # metrics keep the in-plan path.
+        def fan_out(batch_df: DataFrame, epoch_id: int):
+            for t in refreshables:
+                t.maybe_refresh()
+            self._fan_out(batch_df, epoch_id, chain=bool(refreshables))
+
         queries = []
+        sinks = self.sinks
         input_frames = self._input_frames(spark, streaming=True)
         for i, raw in enumerate(input_frames):
-            sinks = self.sinks
-            if refreshables:
-                # Translate refresh_interval (filter/translate.go:108-116):
-                # a dict baked into a started streaming plan can never change,
-                # so the CHAIN is applied inside foreachBatch — each
-                # micro-batch recompiles against the (possibly reloaded)
-                # dictionary. Valid because refreshable chains are stateless
-                # per-row transforms; windowed metrics keep the in-plan path.
-                df = raw
-
-                def fan_out(batch_df: DataFrame, epoch_id: int, _sinks=sinks):
-                    for t in refreshables:
-                        t.maybe_refresh()
-                    out_df = self.transform(batch_df)
-                    out_df.persist()
-                    try:
-                        for sink in _sinks:
-                            sink.write_micro_batch(
-                                self._sink_df(out_df, sink), epoch_id
-                            )
-                    finally:
-                        out_df.unpersist()
-            else:
-                df = self.transform(raw)
-
-                def fan_out(batch_df: DataFrame, epoch_id: int, _sinks=sinks):
-                    batch_df.persist()
-                    try:
-                        for sink in _sinks:
-                            sink.write_micro_batch(
-                                self._sink_df(batch_df, sink), epoch_id
-                            )
-                    finally:
-                        batch_df.unpersist()
-
+            df = raw if refreshables else self.transform(raw)
             mode = output_mode or self._default_mode()
             from gohangout_spark.sinks import FileSink as _FileSink
 

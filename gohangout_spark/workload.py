@@ -2558,7 +2558,7 @@ def html_strip_entities(spark, sf_dir):
     regexp_replace/replace, zero UDF; the fixture wraps each doc in
     tags and injects entities so the decode ordering is load-bearing.
     DuckDB replays the identical chain (explicit whitespace class —
-    Java and RE2 disagree on \s)."""
+    Java and RE2 disagree on \\s)."""
     from gohangout_spark.functions.text import html_to_text
 
     docs = _docs(spark, sf_dir)
@@ -3128,11 +3128,11 @@ def purchase_attribution(spark, sf_dir):
     both asof sides are filtered slices of the SAME events parquet, and
     a union of two filtered scans plans as TWO full scans (scans have no
     reuse mechanism) — so the union frame is built from ONE scan (role
-    flag + per-role CASE payload) and fed to joins._asof_select, the
+    flag + per-role CASE payload) and fed to joins.asof_select_prepared, the
     same single implementation of the asof semantics asof_join runs.
     scans 2 → 1 (audit); 1.13× at sf0.1, 1.34× at 100× events, identical
     rows both scales (tools/ab_purchase_attribution.py)."""
-    from gohangout_spark.functions.joins import _asof_select
+    from gohangout_spark.functions.joins import asof_select_prepared
 
     ev = _events(spark, sf_dir)
     is_p = F.col("event_type") == "purchase"
@@ -3147,12 +3147,12 @@ def purchase_attribution(spark, sf_dir):
         F.when(~is_p, F.lit(1)).otherwise(F.lit(0)).alias("__r"),
     )
     # right rows with a NULL key or NULL event time match nothing — the
-    # _asof_select contract (asof_join drops them pre-union)
+    # asof_select_prepared contract (asof_join drops them pre-union)
     u = u.where(
         (F.col("__r") == 0)
         | (F.col("user_id").isNotNull() & F.col("__ats").isNotNull())
     )
-    out = _asof_select(
+    out = asof_select_prepared(
         u,
         ["user_id"],
         ["event_id", "user_id", "ts"],
@@ -5698,11 +5698,19 @@ def curation_funnel(spark, sf_dir):
     # clean survivors materialize (localCheckpoint — its own concurrent
     # job); wall becomes max(fit, clean) + score instead of
     # fit + (clean + score). Composition and rows are unchanged
-    # (identity-checked in tools/ab_funnel_overlap.py).
+    # (identity-checked in tools/ab_funnel_overlap.py). The fit runs
+    # through inheritable_thread_target so the job-local properties (job
+    # group, pool, description) and tags reach its job; the pool's thread,
+    # and with it the pinned JVM thread, ends when the block exits.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fit = pool.submit(fit_char_bigram_lm, docs.where(F.col("lang") == "en"))
+        fit = pool.submit(
+            inheritable_thread_target(spark)(fit_char_bigram_lm),
+            docs.where(F.col("lang") == "en"),
+        )
         clean_m = clean.select("doc_id", "text").localCheckpoint()
         model = fit.result()
     scored = perplexity_pandas(clean_m, model)

@@ -1912,6 +1912,26 @@ class TestAsofJoinNulls:
             inner = asof_join(left, right, "k", direction=direction, how="inner")
             assert inner.count() == 0
 
+    def test_prepared_tolerance_needs_ts_in_payload(self, spark):
+        """asof_select_prepared reads the right event time out of ``__pay``
+        only for a tolerance; a payload without it is valid untoleranced
+        and a ValueError with one."""
+        import datetime
+
+        from gohangout_spark.functions.joins import asof_select_prepared
+
+        t = datetime.datetime(2024, 1, 1)
+        u = spark.createDataFrame(
+            [("a", t, t, None, 0), ("a", None, t, (9,), 1)],
+            "k string, ts timestamp, __ats timestamp, "
+            "__pay struct<rid:long>, __r int",
+        )
+        args = (u, ["k"], ["k", "ts"], ["rid"], "ts", "ts_right", "backward")
+        rows = asof_select_prepared(*args, None, "left").collect()
+        assert [r["rid"] for r in rows] == [9]
+        with pytest.raises(ValueError, match="ts_right"):
+            asof_select_prepared(*args, 60, "left")
+
 
 class TestSearch:
     """BM25 / tf-idf keyword search (functions/search.py)."""

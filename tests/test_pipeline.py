@@ -952,3 +952,148 @@ class TestWireToESExample:
         }
         # and the routed index pattern rendered per-doc team
         assert all("@metadata" not in d for d in docs) or True
+
+
+def _weblog_module():
+    """The benchmark's weblog generator and chain (perfbench/weblog.py),
+    loaded from its file: perfbench is not a package."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "weblog.py"
+    spec = importlib.util.spec_from_file_location("perfbench_weblog", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+class _CountingSource:
+    """Batch source of generated weblog lines whose ``message`` comes out of
+    a nondeterministic Python UDF that bumps an accumulator once per row it
+    computes, so the count says how often the plan evaluated each line."""
+
+    def __init__(self, spark, lines):
+        from pyspark.sql import functions as F
+
+        self.computed = spark.sparkContext.accumulator(0)
+        acc = self.computed
+
+        def bump(line):
+            acc.add(1)
+            return line
+
+        self._df = spark.createDataFrame([(ln,) for ln in lines], "raw string").select(
+            F.udf(bump, "string").asNondeterministic()("raw").alias("message")
+        )
+
+    def batch(self, spark):
+        return self._df
+
+
+class _FailingSink(MemorySink):
+    def write_batch(self, df):
+        raise RuntimeError("sink down")
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+class TestSinglePassFanOut:
+    """A frame the batch plan reads twice is computed once (persisted) and
+    released when the run ends: the metric fork inside the chain and the
+    two-sink fan-out of the benchmark's weblog chain."""
+
+    LINES = 2000
+
+    def _weblog_pipeline(self, spark, tmp_path):
+        weblog = _weblog_module()
+        lines, _ = weblog.gen_lines(7, self.LINES, 0, 1_767_225_600.0, 3600.0, 0)
+        conf = weblog.pipeline_conf(str(tmp_path / "unused-in"), str(tmp_path / "out"), True)
+        p = Pipeline.from_config(conf)
+        p.sources = [_CountingSource(spark, lines)]
+        return p
+
+    def test_each_line_computed_once(self, spark, tmp_path):
+        p = self._weblog_pipeline(spark, tmp_path)
+        before = _persisted(spark)
+        p.run_batch(spark)
+        assert p.sources[0].computed.value == self.LINES
+        assert _persisted(spark) == before
+        events = spark.read.parquet(str(tmp_path / "out" / "events"))
+        assert events.where("window_start IS NULL").count() > 0  # passthrough rows
+        assert events.where("window_start IS NOT NULL").count() > 0  # metric rows
+
+    def test_no_fork_one_sink_persists_nothing(self, spark, monkeypatch):
+        df_type = type(spark.range(1))
+        calls = []
+        persist = df_type.persist
+        monkeypatch.setattr(
+            df_type, "persist", lambda self, *a: calls.append(self) or persist(self, *a)
+        )
+        yml = """
+inputs:
+- Random: {from: 1, to: 100, max_messages: 50}
+filters:
+- Add:
+    fields:
+      tag: x
+outputs:
+- Stdout: {}
+"""
+        sinks = run_yaml(spark, yml)
+        assert len(sinks[0].rows) == 50
+        assert calls == []
+
+    def test_failing_sink_releases_and_raises(self, spark, tmp_path):
+        p = self._weblog_pipeline(spark, tmp_path)
+        p.sinks[1] = _FailingSink(p.sinks[1].conf)
+        before = _persisted(spark)
+        with pytest.raises(RuntimeError, match="sink down"):
+            p.run_batch(spark)
+        assert _persisted(spark) == before
+
+    def test_micro_batch_epoch_releases(self, spark):
+        p = Pipeline.from_config(
+            ITEST_1, is_text=True, sink_overrides={"Stdout": MemorySink}
+        )
+        seen = []
+
+        class ProbeSink(MemorySink):
+            def write_batch(self, df):
+                seen.append(_persisted(spark))
+                super().write_batch(df)
+
+        p.sinks[1] = ProbeSink({})
+        batch_df = spark.range(30).selectExpr("CAST(id AS STRING) AS message")
+        before = _persisted(spark)
+        p._fan_out(batch_df, epoch_id=0, chain=False)
+        assert [len(s.rows) for s in p.sinks] == [30, 30]
+        assert seen == [before + 1]  # the epoch's frame, cached by the first sink
+        assert _persisted(spark) == before
+        p.sinks[1] = _FailingSink({})
+        with pytest.raises(RuntimeError, match="sink down"):
+            p._fan_out(batch_df, epoch_id=1, chain=False)
+        assert _persisted(spark) == before
+
+    def test_streaming_epoch_releases(self, spark, tmp_path):
+        src = str(tmp_path / "fo_src")
+        spark.range(20).selectExpr("id").write.parquet(src)
+        yml = f"""
+inputs:
+- File:
+    path: "{src}"
+    format: parquet
+    schema: "id long"
+filters: []
+timestamp_field: ts
+outputs:
+- Stdout: {{}}
+- Stdout: {{if: ['EQ(id,3)']}}
+"""
+        p = Pipeline.from_config(yml, is_text=True, sink_overrides={"Stdout": MemorySink})
+        before = _persisted(spark)
+        for q in p.run_streaming(spark, checkpoint=str(tmp_path / "fo_ck"), available_now=True):
+            q.awaitTermination(120)
+        assert [len(s.rows) for s in p.sinks] == [20, 1]
+        assert _persisted(spark) == before
