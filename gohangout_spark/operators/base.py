@@ -65,9 +65,9 @@ class Filter:
 
     def reads_input_twice(self, box: "FilterBox") -> bool:
         """True when this filter's plan forks its input into two branches
-        (a metric stream beside the passthrough, a guarded hit/miss split),
-        so a batch run persists the input once instead of computing the
-        upstream chain per branch (Chain.apply)."""
+        (a metric stream beside the passthrough), so a batch run persists
+        the input once instead of computing the upstream chain per branch
+        (Chain.apply)."""
         return False
 
 

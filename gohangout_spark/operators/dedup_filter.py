@@ -87,10 +87,6 @@ class Dedup(Filter):
             out = keyed.dropDuplicates(key_names)
         return out.drop(*key_names)
 
-    def reads_input_twice(self, box: "FilterBox") -> bool:
-        # an `if` splits the input into the deduplicated and passthrough rows
-        return bool(box.ifs)
-
     def apply_plan(self, df: DataFrame, box: "FilterBox") -> DataFrame:
         if box.ifs:
             # guard: only condition-passing rows are deduplicated; the rest

@@ -86,9 +86,6 @@ class _GuardedPlanOp(Filter):
 
     plan_level = True
 
-    def reads_input_twice(self, box: FilterBox) -> bool:
-        return bool(box.ifs)
-
     def apply_plan(self, df: DataFrame, box: FilterBox) -> DataFrame:
         from gohangout_spark.expr.conditions import compile_conditions
 

@@ -172,21 +172,19 @@ class Pipeline:
         Single-pass like topology/output.go:54-64: a frame the batch plan
         reads more than once is persisted once and released when the run
         ends. That is the input of a box whose filter reads its input twice
-        (LinkMetric/LinkStatsMetric keeping the original events, Dedup and
-        the guarded curation ops under an ``if``), and the chain output
-        when more than one sink reads it."""
+        (LinkMetric/LinkStatsMetric keeping the original events), and the
+        chain output when more than one sink reads it. Both are persisted
+        at the default MEMORY_AND_DISK level, so the run needs storage
+        memory or local disk for them until it ends (docs/SCALE.md)."""
         for raw in self._input_frames(spark, streaming=False):
             self._fan_out(raw)
 
-    def _fan_out(
-        self, df: DataFrame, epoch_id: int | None = None, chain: bool = True
-    ) -> None:
+    def _fan_out(self, df: DataFrame, chain: bool = True) -> None:
         """Write ``df`` to every sink, computing it once: the one fan-out of
         batch runs and of both foreachBatch paths of a stream. ``chain``
         applies the filter chain first (False when ``df`` already carries
-        it, the in-plan streaming path); ``epoch_id`` None writes batch
-        sinks, otherwise micro-batch sinks. Every frame persisted on the
-        way is unpersisted when the writes end, also when a sink raises."""
+        it, the in-plan streaming path). Every frame persisted on the way
+        is unpersisted when the writes end, also when a sink raises."""
         held: list[DataFrame] = []
         try:
             if chain:
@@ -194,11 +192,7 @@ class Pipeline:
             if len(self.sinks) > 1:
                 held.append(df.persist())
             for sink in self.sinks:
-                out = self._sink_df(df, sink)
-                if epoch_id is None:
-                    sink.write_batch(out)
-                else:
-                    sink.write_micro_batch(out, epoch_id)
+                sink.write_batch(self._sink_df(df, sink))
         finally:
             # dependents first, so no unpersist leaves a cached child to recompile
             for frame in reversed(held):
@@ -254,7 +248,7 @@ class Pipeline:
         def fan_out(batch_df: DataFrame, epoch_id: int):
             for t in refreshables:
                 t.maybe_refresh()
-            self._fan_out(batch_df, epoch_id, chain=bool(refreshables))
+            self._fan_out(batch_df, chain=bool(refreshables))
 
         queries = []
         sinks = self.sinks

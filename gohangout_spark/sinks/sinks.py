@@ -35,9 +35,6 @@ class Sink:
     def write_batch(self, df: DataFrame) -> None:  # pragma: no cover
         raise NotImplementedError
 
-    def write_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
-        self.write_batch(df)
-
 
 class StdoutSink(Sink):
     """JSON-line print (stdout_output.go:40-46)."""

@@ -5698,21 +5698,31 @@ def curation_funnel(spark, sf_dir):
     # clean survivors materialize (localCheckpoint — its own concurrent
     # job); wall becomes max(fit, clean) + score instead of
     # fit + (clean + score). Composition and rows are unchanged
-    # (identity-checked in tools/ab_funnel_overlap.py). The fit runs
-    # through inheritable_thread_target so the job-local properties (job
-    # group, pool, description) and tags reach its job; the pool's thread,
-    # and with it the pinned JVM thread, ends when the block exits.
-    from concurrent.futures import ThreadPoolExecutor
+    # (identity-checked in tools/ab_funnel_overlap.py). The fit thread is
+    # an InheritableThread, so the caller's job-local properties (job
+    # group, pool, description) and tags reach its job in pinned-thread
+    # mode; it is a plain thread otherwise.
+    from concurrent.futures import Future
 
-    from pyspark.util import inheritable_thread_target
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fit = pool.submit(
-            inheritable_thread_target(spark)(fit_char_bigram_lm),
-            docs.where(F.col("lang") == "en"),
-        )
+    fit: Future = Future()
+
+    def run_fit(en_docs):
+        try:
+            fit.set_result(fit_char_bigram_lm(en_docs))
+        except BaseException as e:
+            fit.set_exception(e)
+
+    fit_thread = InheritableThread(
+        run_fit, args=(docs.where(F.col("lang") == "en"),), session=spark
+    )
+    fit_thread.start()
+    try:
         clean_m = clean.select("doc_id", "text").localCheckpoint()
         model = fit.result()
+    finally:
+        fit_thread.join()
     scored = perplexity_pandas(clean_m, model)
     bucket = (
         F.when(F.col("ppl").isNull(), "tail")

@@ -1045,6 +1045,18 @@ outputs:
         assert len(sinks[0].rows) == 50
         assert calls == []
 
+    def test_guarded_dedup_is_not_held(self, spark):
+        # only the measured fork (a metric box keeping its originals) is
+        # persisted; a guarded Dedup's two filtered branches are not
+        from gohangout_spark.operators import Chain, Dedup, FilterBox
+
+        df = spark.range(10).selectExpr("CAST(id % 3 AS STRING) AS k", "id")
+        held = []
+        box = FilterBox(Dedup(fields="k"), ifs=['EQ(k,"1")'], ts_field="k")
+        out = Chain([box]).apply(df, held)
+        assert held == []
+        assert out.count() == 8
+
     def test_failing_sink_releases_and_raises(self, spark, tmp_path):
         p = self._weblog_pipeline(spark, tmp_path)
         p.sinks[1] = _FailingSink(p.sinks[1].conf)
@@ -1067,13 +1079,13 @@ outputs:
         p.sinks[1] = ProbeSink({})
         batch_df = spark.range(30).selectExpr("CAST(id AS STRING) AS message")
         before = _persisted(spark)
-        p._fan_out(batch_df, epoch_id=0, chain=False)
+        p._fan_out(batch_df, chain=False)
         assert [len(s.rows) for s in p.sinks] == [30, 30]
         assert seen == [before + 1]  # the epoch's frame, cached by the first sink
         assert _persisted(spark) == before
         p.sinks[1] = _FailingSink({})
         with pytest.raises(RuntimeError, match="sink down"):
-            p._fan_out(batch_df, epoch_id=1, chain=False)
+            p._fan_out(batch_df, chain=False)
         assert _persisted(spark) == before
 
     def test_streaming_epoch_releases(self, spark, tmp_path):
