@@ -22,13 +22,18 @@ Operator precedence: ! > && > || (parse.go:10-17); ! is right-associative.
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass
+from typing import Callable, TypeVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gohangout_spark.expr.paths import field_col, field_exists
+
+
+T = TypeVar("T")
 
 
 class ConditionSyntaxError(ValueError):
@@ -229,6 +234,58 @@ def _compile_pred(text: str, df: DataFrame | None, ts_field: str) -> Column:
 # ------------------------------------------------------------ shunting yard
 
 _PREC = {"!": 3, "&&": 2, "||": 1}
+_COLUMN_OPS = {"!": operator.invert, "&&": operator.and_, "||": operator.or_}
+
+
+def shunting_yard(s: str, leaf: Callable[[str], T], ops: dict[str, Callable[..., T]]) -> T:
+    """Reduce one DSL condition string: ``leaf(text)`` turns each predicate
+    call into a value, ``ops[op]`` combines values (one operand for ``!``,
+    two for ``&&`` and ``||``). The Column compiler and the dict evaluator
+    both parse through here, so they share precedence and syntax errors."""
+    toks = _tokenize(s)
+    out: list[T] = []
+    stack: list[str] = []
+
+    def reduce_op(op: str):
+        if op == "!":
+            if not out:
+                raise ConditionSyntaxError(f"dangling '!' in {s!r}")
+            out.append(ops[op](out.pop()))
+        else:
+            if len(out) < 2:
+                raise ConditionSyntaxError(f"dangling {op!r} in {s!r}")
+            b, a = out.pop(), out.pop()
+            out.append(ops[op](a, b))
+
+    for t in toks:
+        if t.kind == "pred":
+            out.append(leaf(t.text))
+        elif t.kind == "lparen":
+            stack.append("(")
+        elif t.kind == "rparen":
+            while stack and stack[-1] != "(":
+                reduce_op(stack.pop())
+            if not stack:
+                raise ConditionSyntaxError(f"unbalanced ')' in {s!r}")
+            stack.pop()
+        else:  # operator
+            prec = _PREC[t.text]
+            # '!' is right-associative (NOT right-assoc per parse.go); && || left
+            while (
+                stack
+                and stack[-1] != "("
+                and (_PREC[stack[-1]] > prec or (_PREC[stack[-1]] == prec and t.text != "!"))
+            ):
+                reduce_op(stack.pop())
+            stack.append(t.text)
+    while stack:
+        op = stack.pop()
+        if op == "(":
+            raise ConditionSyntaxError(f"unbalanced '(' in {s!r}")
+        reduce_op(op)
+    if len(out) != 1:
+        raise ConditionSyntaxError(f"bad condition {s!r}")
+    return out[0]
 
 
 def compile_condition(s: str, df: DataFrame | None = None, ts_field: str = "@timestamp") -> Column:
@@ -240,50 +297,7 @@ def compile_condition(s: str, df: DataFrame | None = None, ts_field: str = "@tim
         from gohangout_spark.expr.template_conditions import compile_template_condition
 
         return compile_template_condition(s, df, ts_field)
-    toks = _tokenize(s)
-    out: list[Column] = []
-    ops: list[str] = []
-
-    def reduce_op(op: str):
-        if op == "!":
-            if not out:
-                raise ConditionSyntaxError(f"dangling '!' in {s!r}")
-            out.append(~out.pop())
-        else:
-            if len(out) < 2:
-                raise ConditionSyntaxError(f"dangling {op!r} in {s!r}")
-            b, a = out.pop(), out.pop()
-            out.append((a & b) if op == "&&" else (a | b))
-
-    for t in toks:
-        if t.kind == "pred":
-            out.append(_compile_pred(t.text, df, ts_field))
-        elif t.kind == "lparen":
-            ops.append("(")
-        elif t.kind == "rparen":
-            while ops and ops[-1] != "(":
-                reduce_op(ops.pop())
-            if not ops:
-                raise ConditionSyntaxError(f"unbalanced ')' in {s!r}")
-            ops.pop()
-        else:  # operator
-            prec = _PREC[t.text]
-            # '!' is right-associative (NOT right-assoc per parse.go); && || left
-            while (
-                ops
-                and ops[-1] != "("
-                and (_PREC[ops[-1]] > prec or (_PREC[ops[-1]] == prec and t.text != "!"))
-            ):
-                reduce_op(ops.pop())
-            ops.append(t.text)
-    while ops:
-        op = ops.pop()
-        if op == "(":
-            raise ConditionSyntaxError(f"unbalanced '(' in {s!r}")
-        reduce_op(op)
-    if len(out) != 1:
-        raise ConditionSyntaxError(f"bad condition {s!r}")
-    return out[0]
+    return shunting_yard(s, lambda text: _compile_pred(text, df, ts_field), _COLUMN_OPS)
 
 
 def compile_conditions(

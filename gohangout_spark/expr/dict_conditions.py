@@ -11,15 +11,15 @@ surface, evaluated eagerly.
 
 from __future__ import annotations
 
+import operator
 import re
 
 from gohangout_spark.expr.conditions import (
-    _PREC,
     ConditionSyntaxError,
     _literal,
     _path_of,
     _split_args,
-    _tokenize,
+    shunting_yard,
 )
 from gohangout_spark.expr.paths import parse_field
 
@@ -74,48 +74,10 @@ def _eval_pred(text: str, obj) -> bool:
     )
 
 
+# every predicate evaluates to a bool, so the bitwise operators are exact
+_BOOL_OPS = {"!": operator.not_, "&&": operator.and_, "||": operator.or_}
+
+
 def evaluate_condition(s: str, obj) -> bool:
     """Evaluate one boolean-DSL condition string against a dict."""
-    toks = _tokenize(s)
-    out: list[bool] = []
-    ops: list[str] = []
-
-    def reduce_op(op: str):
-        if op == "!":
-            if not out:
-                raise ConditionSyntaxError(f"dangling '!' in {s!r}")
-            out.append(not out.pop())
-        else:
-            if len(out) < 2:
-                raise ConditionSyntaxError(f"dangling {op!r} in {s!r}")
-            b, a = out.pop(), out.pop()
-            out.append((a and b) if op == "&&" else (a or b))
-
-    for t in toks:
-        if t.kind == "pred":
-            out.append(_eval_pred(t.text, obj))
-        elif t.kind == "lparen":
-            ops.append("(")
-        elif t.kind == "rparen":
-            while ops and ops[-1] != "(":
-                reduce_op(ops.pop())
-            if not ops:
-                raise ConditionSyntaxError(f"unbalanced ')' in {s!r}")
-            ops.pop()
-        else:
-            prec = _PREC[t.text]
-            while (
-                ops
-                and ops[-1] != "("
-                and (_PREC[ops[-1]] > prec or (_PREC[ops[-1]] == prec and t.text != "!"))
-            ):
-                reduce_op(ops.pop())
-            ops.append(t.text)
-    while ops:
-        op = ops.pop()
-        if op == "(":
-            raise ConditionSyntaxError(f"unbalanced '(' in {s!r}")
-        reduce_op(op)
-    if len(out) != 1:
-        raise ConditionSyntaxError(f"bad condition {s!r}")
-    return out[0]
+    return shunting_yard(s, lambda text: _eval_pred(text, obj), _BOOL_OPS)

@@ -3131,7 +3131,8 @@ def purchase_attribution(spark, sf_dir):
     flag + per-role CASE payload) and fed to joins.asof_select_prepared, the
     same single implementation of the asof semantics asof_join runs.
     scans 2 → 1 (audit); 1.13× at sf0.1, 1.34× at 100× events, identical
-    rows both scales (tools/ab_purchase_attribution.py)."""
+    rows both scales (OPTIMIZATION_r10.md, "purchase_attribution — asof
+    union from ONE events scan")."""
     from gohangout_spark.functions.joins import asof_select_prepared
 
     ev = _events(spark, sf_dir)
@@ -5698,7 +5699,8 @@ def curation_funnel(spark, sf_dir):
     # clean survivors materialize (localCheckpoint — its own concurrent
     # job); wall becomes max(fit, clean) + score instead of
     # fit + (clean + score). Composition and rows are unchanged
-    # (identity-checked in tools/ab_funnel_overlap.py). The fit thread is
+    # (identity-checked, OPTIMIZATION_r10.md "curation_funnel — overlap the
+    # model-fit job with the clean subtree"). The fit thread is
     # an InheritableThread, so the caller's job-local properties (job
     # group, pool, description) and tags reach its job in pinned-thread
     # mode; it is a plain thread otherwise.
@@ -9267,17 +9269,19 @@ def multimodal_flac_features(spark, sf_dir):
 # driver rows predate the rewrite, so driver-grade evidence for the NEW
 # shapes is the weakest link (this also pins the dup_span_stats n_windows
 # int32→int64 widening).  rfm_segments joins the head for its r10
-# range-pass restructure.  Slots 26-50 take the stalest oracle-backed
+# range-pass restructure.  Slots 27-50 take the stalest oracle-backed
 # rows with driver history: the 13 remaining r5-cohort rows, then the r6
 # cohort alphabetically.  Every row displaced below slot 50 is green in
 # CORRECTNESS_r06..r09 and re-confirmed in the FULLREG sweeps; nothing
 # below the line is staler than the freshest fill row (TestDriverWindow
 # recomputes the staleness table from the raw CORRECTNESS artifacts).
 _GATE_PRIORITY = [
-    # --- 25 slots: r9/r10-rewritten queries (driver rows predate the
+    # --- 26 slots: r9/r10-rewritten queries (driver rows predate the
     # rewrite; CORRECTNESS_r10 completes their evidence chain).
     # tpch_q18 / tpch_q20 / purchase_attribution joined in the final r10
-    # session (single-pass q18, window-total q20, one-scan asof union) ---
+    # session (single-pass q18, window-total q20, one-scan asof union);
+    # tpch_q21 (single-pass lineitem rewrite, last driver row r7) was
+    # rotated in after the round closed (VERDICT r10 #2) ---
     "kneser_ney_perplexity",
     "dsir_importance_weights",
     "dup_span_stats",
@@ -9303,6 +9307,7 @@ _GATE_PRIORITY = [
     "tpch_q18",
     "tpch_q20",
     "purchase_attribution",
+    "tpch_q21",
     # --- 13 slots: the r5-cohort remainder (last driver row r5) ---
     "multimodal_flac_features",
     "multimodal_gif_features",
@@ -9317,7 +9322,7 @@ _GATE_PRIORITY = [
     "simhash_md5_neardup",
     "udaf_geomean",
     "webdataset_export",
-    # --- slots 36-50: r6 cohort alphabetically (last driver row r6);
+    # --- slots 40-50: r6 cohort alphabetically (last driver row r6);
     # the remainder of the cohort continues below the line ---
     "bloom_md5_decontaminate",
     "bpe_encode_fixed",
@@ -9397,7 +9402,6 @@ _GATE_PRIORITY = [
     "tpch_q14",
     "tpch_q15",
     "tpch_q16",
-    "tpch_q21",
     "tpch_q4",
     "tpch_q6",
     "tpch_q7",

@@ -5,6 +5,7 @@ filter/date_test.go layout cases.
 """
 
 import datetime
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -16,6 +17,7 @@ from gohangout_spark.expr.conditions import (
     parse_go_duration,
 )
 from gohangout_spark.expr.dateformat import go_layout_to_java
+from gohangout_spark.expr.dict_conditions import evaluate_condition
 from gohangout_spark.expr.paths import delete_field, field_col, parse_field, set_field
 from gohangout_spark.expr.render import compile_render
 
@@ -103,6 +105,33 @@ class TestConditions:
     )
     def test_truth_table(self, df, cond, expected):
         assert names_matching(df, compile_condition(cond, df, ts_field="ts")) == expected
+
+    @pytest.mark.parametrize(
+        "cond",
+        [
+            'EQ(name,"nope") || EQ(name,"childe") && EQ(age,20)',
+            '!!EQ(name,"childe")',
+            '!(EQ(name,"childe") || EQ(age,nil))',
+            '(EQ(name,"other") || HasPrefix(name,"chi")) && Contains(message,"world")',
+            'IN(tags,"app") || Match(message,"^\\d+")',
+            'HasSuffix(user,name,"jia") && !EQ(user,age,nil)',
+            'EQ(name,"childe") &&',
+            '(EQ(name,"childe")',
+            'EQ(name,"childe"))',
+        ],
+    )
+    def test_dict_evaluator_agrees(self, df, cond):
+        """The driver-side dict evaluator (ES sniff ``match``) reduces through
+        the Column compiler's parser: the same truth value on each row, and
+        the same ConditionSyntaxError for a malformed string."""
+        rows = {r["name"]: r.asDict(recursive=True) for r in df.collect()}
+        try:
+            expected = names_matching(df, compile_condition(cond, df))
+        except ConditionSyntaxError as e:
+            with pytest.raises(ConditionSyntaxError, match=re.escape(str(e))):
+                evaluate_condition(cond, rows["childe"])
+            return
+        assert sorted(n for n, row in rows.items() if evaluate_condition(cond, row)) == expected
 
     def test_and_list(self, df):
         c = compile_conditions(['EQ(name,"childe")', "Exist(age)"], df, ts_field="ts")

@@ -9,8 +9,16 @@ row count that went through its BroadcastExchange (the numOutputRows SQL
 metric) must stay under the entry's declared bound. A new query that
 accidentally plans a theta join fails the shape test; a whitelisted query
 whose build side silently grows fails the bound test.
+
+The headline queries' plan shapes (scans, exchanges, reuse, join kinds,
+explodes, Python-eval nodes, Spark jobs) are pinned exactly in
+tests/plan_shapes.json, which tools/plan_shapes.py regenerates.
 """
 
+import json
+import os
+
+from gohangout_spark.planstats import executed_plan, shape, walk
 from gohangout_spark.workload import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -61,21 +69,6 @@ BNLJ_OK = {
 }
 
 
-def _walk(node, visit):
-    """Generic JVM SparkPlan traversal that follows AQE wrappers
-    (AdaptiveSparkPlanExec.executedPlan, *QueryStageExec.plan)."""
-    name = node.getClass().getSimpleName()
-    visit(node, name)
-    if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), visit)
-        return
-    if name.endswith("QueryStageExec"):
-        _walk(node.plan(), visit)
-        return
-    for i in range(node.children().size()):
-        _walk(node.children().apply(i), visit)
-
-
 def _bnlj_broadcast_rows(df):
     """Execute df and return the numOutputRows metric of every
     BroadcastExchange feeding a BroadcastNestedLoopJoin build side."""
@@ -87,7 +80,7 @@ def _bnlj_broadcast_rows(df):
             build = node.buildSide().toString()
             sides.append(node.right() if "Right" in build else node.left())
 
-    _walk(df._jdf.queryExecution().executedPlan(), find_joins)
+    walk(executed_plan(df), find_joins)
 
     counts = []
     for side in sides:
@@ -103,7 +96,7 @@ def _bnlj_broadcast_rows(df):
                     int(node.child().metrics().apply("numOutputRows").value())
                 )
 
-        _walk(side, read_metric)
+        walk(side, read_metric)
         if found:
             counts.append(found[0])
     return counts
@@ -133,46 +126,13 @@ def test_no_scale_killer_joins(spark):
     for name, (fn, _) in sorted(QUERIES.items()):
         if name in STREAMING_GATES:
             continue
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
+        found = set()
+        walk(executed_plan(fn(spark, SF)), lambda _node, n: found.add(n))
+        if "CartesianProductExec" in found:
             offenders[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
+        elif "BroadcastNestedLoopJoinExec" in found and name not in BNLJ_OK:
             offenders[name] = "BroadcastNestedLoopJoin (not whitelisted)"
     assert not offenders, offenders
-
-
-# Exchange-reuse invariants (ADVICE r9): the kneser/dsir corpus subtree
-# sharing is held up by canonicalization-sensitive expression choices
-# (the stated-once null filter, the count(CASE) pruning blocker in
-# lm.py/sampling.py). A Spark upgrade that rewrites count(CASE WHEN x IS
-# NOT NULL) to count(*) would silently restore the multi-pass corpus
-# scan with no correctness failure — so the invariant is MEASURED here:
-# query -> (min ReusedExchange nodes, max Generate/explode nodes in the
-# executed plan).
-EXCHANGE_REUSE = {
-    "kneser_ney_perplexity": (3, 1),
-    "dsir_importance_weights": (1, 1),
-    "dup_span_stats": (0, 1),
-}
-
-
-def test_exchange_reuse_invariants(spark):
-    bad = {}
-    for name, (min_reuse, max_gen) in sorted(EXCHANGE_REUSE.items()):
-        df = QUERIES[name][0](spark, SF)
-        df.collect()
-        counts = {"ReusedExchangeExec": 0, "GenerateExec": 0}
-
-        def visit(node, n):
-            if n in counts:
-                counts[n] += 1
-
-        _walk(df._jdf.queryExecution().executedPlan(), visit)
-        if counts["ReusedExchangeExec"] < min_reuse:
-            bad[name] = f"ReusedExchange {counts['ReusedExchangeExec']} < {min_reuse}"
-        if counts["GenerateExec"] > max_gen:
-            bad[name] = f"Generate {counts['GenerateExec']} > {max_gen} (corpus explode re-ran)"
-    assert not bad, bad
 
 
 def test_bnlj_build_sides_bounded(spark):
@@ -187,3 +147,22 @@ def test_bnlj_build_sides_bounded(spark):
             if rows > bound:
                 over[name] = f"broadcast side {rows} rows > bound {bound} ({why})"
     assert not over, over
+
+
+def test_headline_plan_shapes(spark):
+    """Every headline query keeps exactly its pinned plan shape at sf0.01.
+    A change that moves any count, better or worse, regenerates
+    tests/plan_shapes.json with tools/plan_shapes.py so the new shape is
+    reviewed as a diff. Some shapes rest on nothing a result check sees:
+    kneser/dsir share one corpus explode through exchange reuse that
+    canonicalization-sensitive expressions in lm.py/sampling.py hold up,
+    and a Spark upgrade that rewrote them would restore the multi-pass
+    scan with no wrong row."""
+    with open(os.path.join(os.path.dirname(__file__), "plan_shapes.json")) as f:
+        pins = json.load(f)
+    changed = []
+    for name, pinned in pins["shapes"].items():
+        now = shape(spark, lambda: QUERIES[name][0](spark, pins["sf_dir"]))
+        if now != pinned:
+            changed.append(f"{name}: pinned {pinned}, now {now}")
+    assert not changed, "\n".join(changed)

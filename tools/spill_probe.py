@@ -29,19 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from gohangout_spark import get_spark
-
-
-def _walk(node, visit):
-    name = node.getClass().getSimpleName()
-    visit(node, name)
-    if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), visit)
-        return
-    if name.endswith("QueryStageExec"):
-        _walk(node.plan(), visit)
-        return
-    for i in range(node.children().size()):
-        _walk(node.children().apply(i), visit)
+from gohangout_spark.planstats import executed_plan, walk
 
 
 def spill_of(df, reduce_big: bool):
@@ -67,7 +55,7 @@ def spill_of(df, reduce_big: bool):
             if "peak" in mname.lower():
                 spill["peak_mem_max"] = max(spill["peak_mem_max"], val)
 
-    _walk(df._jdf.queryExecution().executedPlan(), visit)
+    walk(executed_plan(df), visit)
     return wall, spill
 
 
